@@ -3,8 +3,9 @@
 The reference consumes pre-extracted ``text`` (commands/build_index.py:11);
 the north-rule input table carries ``html binary`` and demands per-url
 byte-identical extracted text. So extraction is OUR spec, defined once here
-as a pure function, and the Spark side calls the SAME function inside a
-vectorized pandas UDF batch loop (extract_series) — parity by construction.
+as a pure function, and the Spark side calls the SAME function on each row
+of the index build's fused stage-0 Arrow batches
+(plans.builder.make_stage0) — parity by construction.
 
 Spec (documented, deterministic, stdlib-only):
   1. decode bytes as UTF-8 (errors="replace");
@@ -18,9 +19,7 @@ from __future__ import annotations
 
 import html as _html
 import re
-from typing import Iterator, Optional, Union
-
-import pandas as pd
+from typing import Union
 
 # TWO passes, deliberately: script/style blocks and comments are removed
 # FIRST, then bare tags. A single combined alternation is NOT equivalent on
@@ -49,26 +48,3 @@ def extract_text(html: Union[bytes, str, None]) -> str:
     # collapse whitespace runs + strip: str.split() (C, unicode whitespace)
     # replaces the former re \s+ sub — same result, measurably faster
     return " ".join(s.split())
-
-
-def extract_series(html: pd.Series) -> pd.Series:
-    """Batch extraction for the Arrow UDF path.
-
-    Regex-dominated work has no better-than-C vectorization in pandas for
-    bytes→str pipelines; the loop below is per-ROW-of-an-Arrow-batch (not
-    per-row-of-the-DataFrame through Python serialization), which is the
-    sanctioned pandas-UDF shape.
-    """
-    return html.map(extract_text)
-
-
-def make_extract_udf():
-    """F.pandas_udf(string) over the html binary column."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for b in batches:
-            yield extract_series(b)
-
-    return extract_udf

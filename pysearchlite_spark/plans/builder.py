@@ -37,6 +37,11 @@ become visible at the atomic manifest commit; a re-run drops partial
 (unmarked) segment dirs, rebuilds ONLY missing segments (filter pushed before
 the shuffles), and commits the union. Per-partition metrics land in
 build_log/ with lineage.
+
+ONE segment writer: build_index and streaming.ingest.append_batch both write
+segments through _stage_runs (stage 0 → staged runs + per-segment totals)
+and _write_segments (docmap + packed postings + build_log); an append only
+shifts the docID base (first_id) and stages into its own scratch dir.
 """
 
 from __future__ import annotations
@@ -85,35 +90,6 @@ def make_tokens_udf():
             yield tokens_series(b)
 
     return tokens_udf
-
-
-STAGE_SCHEMA = ("doc_id long, url string, doc_len long, "
-                "terms array<string>, tfs array<int>, seg long")
-
-
-def _tf_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(doc_id, url, text) → (doc_id, url, doc_len, terms, tfs): tokenize +
-    per-doc tf counting in one vectorized pass (tokenizer.tf_series), so the
-    posting build needs only ONE shuffle (groupBy(seg, term)) instead of an
-    occurrence-level pre-aggregation shuffle. (Used by the streaming ingest
-    path; the batch build uses the fused _invert_stage below.)"""
-    from pysearchlite_spark.tokenizer import tf_series
-    for b in batches:
-        terms, tfs, lens = tf_series(b["text"])
-        yield pd.DataFrame({"doc_id": b["doc_id"], "url": b["url"],
-                            "doc_len": lens.astype("int64"),
-                            "terms": terms, "tfs": tfs})
-
-
-def _tf_pos_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """_tf_stage plus per-doc flat position runs (poss) — the ingest path
-    of POSITIONAL indexes; see tokenizer.tf_pos_series for the layout."""
-    from pysearchlite_spark.tokenizer import tf_pos_series
-    for b in batches:
-        terms, tfs, poss, lens = tf_pos_series(b["text"])
-        yield pd.DataFrame({"doc_id": b["doc_id"], "url": b["url"],
-                            "doc_len": lens.astype("int64"),
-                            "terms": terms, "tfs": tfs, "poss": poss})
 
 
 # The staged table of the batch build: SPIMI runs (term rows, tb >= 0),
@@ -287,7 +263,7 @@ def make_stage0(segment_docs: int, n_buckets: int, *,
 
     offsets_bc: broadcast {bucket: global offset} for deterministic docID
     assignment (rows must arrive sorted by (_b, url) within partitions —
-    see assign_doc_ids for the rule). None → batches carry doc_id already.
+    see _bucket_offsets for the rule). None → batches carry doc_id already.
     """
     from pysearchlite_spark.extract import extract_text
 
@@ -433,21 +409,28 @@ def doc_sort_key(url: str, n_buckets: int = DOC_BUCKETS):
     return (zlib.crc32(url.encode("utf-8")) % n_buckets, url)
 
 
-def _bucket_offsets(df: DataFrame, order_col: str,
-                    num_partitions: Optional[int] = None):
+def _bucket_offsets(df: DataFrame, order_col: str, first_id: int = 0):
     """(bucket expr, broadcast {bucket: global rank offset}, n_partitions)
-    for the deterministic docID rule — the counts pass projects only
-    `order_col`, so Catalyst prunes every other column (incl. html) out of
-    the scan and no UDF runs."""
+    for the deterministic docID rule: dense ids from first_id up, ranked
+    over the total order (crc32(url) % DOC_BUCKETS, url) — computed
+    scalably with NO sampling and NO caching:
+      1. per-bucket counts from a url-only projection (column-pruned scan —
+         every other column, incl. html, is pruned and no UDF runs);
+      2. repartition by the hash bucket (deterministic, unlike
+         repartitionByRange whose sampled boundaries differ per execution)
+         + sortWithinPartitions + these broadcast per-bucket offsets, which
+         make_stage0 turns into ids.
+    Replaces the reference's arrival-order docID (doc_list.py:42-45) with an
+    order reproducible under any parallelism/cluster size."""
     spark = df.sparkSession
-    P = num_partitions or min(DOC_BUCKETS, max(
+    P = min(DOC_BUCKETS, max(
         32, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))))
     bucket = (F.crc32(F.encode(F.col(order_col), "UTF-8"))
               % F.lit(DOC_BUCKETS)).cast("int")
     counts = {r["_b"]: r["cnt"] for r in
               df.select(bucket.alias("_b"))
                 .groupBy("_b").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
+    offsets, acc = {}, int(first_id)
     for b in sorted(counts):
         offsets[b] = acc
         acc += counts[b]
@@ -455,57 +438,13 @@ def _bucket_offsets(df: DataFrame, order_col: str,
     return bucket, boff, P
 
 
-def assign_doc_ids(df: DataFrame, order_col: str = "url",
-                   num_partitions: Optional[int] = None) -> DataFrame:
-    """Deterministic dense docIDs: rank over the total order
-    (crc32(url) % DOC_BUCKETS, url) — computed scalably with NO sampling and
-    NO caching:
-      1. per-bucket counts from a url-only projection (column-pruned scan —
-         upstream UDF columns are never computed);
-      2. repartition by the hash bucket (deterministic, unlike
-         repartitionByRange whose sampled boundaries differ per execution)
-         + sortWithinPartitions + broadcast per-bucket offsets.
-    Replaces the reference's arrival-order docID (doc_list.py:42-45) with an
-    order reproducible under any parallelism/cluster size.
-    """
-    spark = df.sparkSession
-    bucket, boff, P = _bucket_offsets(df, order_col, num_partitions)
-    fields = df.schema.fieldNames()
-    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                           for f in df.schema.fields) + ", doc_id long"
-    parted = (df.withColumn("_b", bucket)
-                .repartition(P, F.col("_b"))
-                .sortWithinPartitions("_b", order_col))
-
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen: dict = {}
-        for b in batches:
-            if len(b) == 0:
-                continue
-            off = boff.value
-            bs = b["_b"].to_numpy()
-            ids = np.empty(len(b), dtype=np.int64)
-            # rows arrive sorted by (_b, url); several buckets may share a
-            # partition — track a running rank per bucket
-            for bb in np.unique(bs):
-                m = bs == bb
-                s = seen.get(int(bb), 0)
-                n = int(m.sum())
-                ids[m] = off[int(bb)] + s + np.arange(n, dtype=np.int64)
-                seen[int(bb)] = s + n
-            out = b[fields].copy()
-            out["doc_id"] = ids
-            yield out
-
-    return parted.mapInPandas(add_ids, out_schema)
-
-
 def _stage0_df(spark: SparkSession, df: DataFrame, *, text_col: str,
                id_col: Optional[str], url_col: Optional[str],
                html_col: Optional[str], lang_filter: Optional[str],
                segment_docs: int, n_buckets: int,
                out_dir: Optional[str] = None,
-               with_positions: bool = False) -> DataFrame:
+               with_positions: bool = False,
+               first_id: int = 0) -> DataFrame:
     """Any input → staged RUNS via the fused stage-0.
 
     Only the payload column (html OR text) plus url is carried through the
@@ -516,7 +455,10 @@ def _stage0_df(spark: SparkSession, df: DataFrame, *, text_col: str,
     for object stores / DFS); with out_dir set, workers write the runs
     parquet DIRECTLY (make_stage0_sink, local-fs rename semantics) and the
     returned DataFrame carries per-(task, seg) stats rows
-    ("seg long, n long, sdl long")."""
+    ("seg long, n long, sdl long").
+
+    first_id: docID base of the url-ranked ids (an append continues after
+    the index's last segment); ignored when id_col supplies the ids."""
     if lang_filter and "lang" in df.columns:
         df = df.filter(F.col("lang") == lang_filter)
     payload = F.col(html_col if html_col is not None else text_col)
@@ -548,11 +490,137 @@ def _stage0_df(spark: SparkSession, df: DataFrame, *, text_col: str,
             payload))
         return src.mapInArrow(mk(), out_schema)
     base = df.select(F.col(url_col or "url").alias("url"), payload)
-    bucket, boff, P = _bucket_offsets(base, "url")
+    bucket, boff, P = _bucket_offsets(base, "url", first_id)
     parted = (base.withColumn("_b", bucket)
               .repartition(P, F.col("_b"))
               .sortWithinPartitions("_b", "url"))
     return parted.mapInArrow(mk(offsets_bc=boff), out_schema)
+
+
+def _stage_runs(spark: SparkSession, df: DataFrame, stage_dir: str,
+                **stage0_kw) -> dict:
+    """Stage 0 of `df` into `stage_dir` → {seg: (n_docs, sum_doc_len)} of
+    the staged docs. Local paths → worker-direct parquet sink (atomic
+    per-task rename) whose result rows ARE the per-(task, seg) totals, so
+    no follow-up stats job; scheme'd paths (hdfs://, s3://) → JVM writer via
+    the output committer (rename semantics differ on object stores), then
+    one scan of the staged stats rows."""
+    if "://" in stage_dir:
+        (_stage0_df(spark, df, **stage0_kw)
+         .write.mode("overwrite").parquet(stage_dir))
+        return _staged_seg_totals(spark, stage_dir)
+    os.makedirs(stage_dir, exist_ok=True)
+    totals: dict = {}
+    for r in _stage0_df(spark, df, out_dir=stage_dir, **stage0_kw).collect():
+        n, sdl = totals.get(int(r["seg"]), (0, 0))
+        totals[int(r["seg"])] = (n + int(r["n"]), sdl + int(r["sdl"]))
+    return totals
+
+
+def _staged_seg_totals(spark: SparkSession, stage_dir: str) -> dict:
+    """{seg: (n_docs, sum_doc_len)} from the staged tb == -2 stats rows —
+    ONE tiny scan job (resume, or the JVM-writer stage path)."""
+    rows = (spark.read.schema(RUNS_SCHEMA).parquet(stage_dir)
+            .filter(F.col("tb") == -2)
+            .groupBy("seg")
+            .agg(F.sum(F.element_at("doc_ids", 1)).alias("n"),
+                 F.sum(F.element_at("dls", 1)).alias("sdl"))
+            .collect())
+    return {int(r["seg"]): (int(r["n"]), int(r["sdl"])) for r in rows}
+
+
+def _write_segments(spark: SparkSession, cat: IndexCatalog, stage_dir: str,
+                    *, doc_segs: List[int], post_segs: List[int],
+                    avgdl: float, sum_dl: int, n_buckets: int,
+                    lineage: dict) -> None:
+    """Staged runs → docmap rows of `doc_segs` and packed postings of
+    `post_segs` (packed at `avgdl`), each segment marked _STAGED when
+    written, plus the pack's build_log rows. Committing is the caller's.
+
+    docmap and postings are written CONCURRENTLY: independent outputs from
+    the same staged runs; two driver threads let the Spark scheduler
+    overlap the small docmap write with the pack exchange instead of paying
+    two sequential job latencies. They are InheritableThreads so their jobs
+    carry the caller's job group."""
+    from pyspark import InheritableThread
+
+    runs = spark.read.schema(RUNS_SCHEMA).parquet(stage_dir)
+    errors: List[BaseException] = []
+
+    def _write_docmap() -> None:
+        # repartition to align tasks with output partitions: one writer task
+        # per segment → one file per dir instead of tasks×segments files
+        (runs.filter((F.col("tb") == -1) & F.col("seg").isin(doc_segs))
+         .select(F.element_at("doc_ids", 1).alias("doc_id"), "url",
+                 F.element_at("dls", 1).alias("doc_len"), "seg")
+         .repartition(max(len(doc_segs), 1), F.col("seg"))
+         .write.partitionBy("seg").mode("append").parquet(cat.docmap_dir()))
+        for s in doc_segs:
+            cat.mark_staged("docmap", s)
+
+    def _write_postings() -> None:
+        t_pack = time.time()
+        # reducer count from the staged data volume (sum_dl posting
+        # entries): ~4 waves per core for big inputs, but never more
+        # reducers than the data supports or distinct (seg, tb) exchange
+        # keys — more reducers than keys is pure task overhead; ≥50M
+        # entries per task bounds retry granularity at huge scale (the pack
+        # UDF streams batch-at-a-time, so task memory does not grow with
+        # partition size). The small-input floor relaxes to ~50k
+        # entries/task up to ONE full wave of cores, so a mid-size input
+        # still packs on every core.
+        par = spark.sparkContext.defaultParallelism
+        target = max(min(4 * par, sum_dl // 200_000 + 1),
+                     min(par, sum_dl // 50_000 + 1))
+        n_out_parts = max(1, min(len(post_segs) * n_buckets,
+                                 max(target, sum_dl // 50_000_000 + 1)))
+        src = (runs.filter((F.col("tb") >= 0)
+                           & F.col("seg").isin(post_segs)).drop("url"))
+        if "://" not in cat.postings_dir():
+            # worker-direct parquet sink; per-(seg, tb) metrics come back as
+            # the job's rows — no post-hoc build_log scan job
+            metric_rows = _pack_runs(
+                src, avgdl=avgdl, n_out_parts=n_out_parts,
+                sink_dir=cat.postings_dir()).collect()
+        else:
+            (_pack_runs(src, avgdl=avgdl, n_out_parts=n_out_parts)
+             .write.partitionBy("seg", "tb").mode("append")
+             .parquet(cat.postings_dir()))
+            # the same per-(seg, tb) metrics, aggregated from the written
+            # table (metrics AS DATA — a Python accumulator would serialize
+            # task updates through the driver's accumulator channel)
+            metric_rows = (
+                spark.read.schema(POSTINGS_SCHEMA).parquet(cat.postings_dir())
+                .filter(F.col("seg").isin(post_segs))
+                .groupBy("seg", "tb")
+                .agg(F.count("*").alias("n_terms"),
+                     F.sum("df").alias("n_postings"),
+                     F.sum(F.length("docs") + F.length("tfs")
+                           + F.length("dls")).alias("bytes_packed"))
+                .collect())
+        for s in post_segs:
+            cat.mark_staged("postings", s)
+        _write_build_log_rows(spark, cat, metric_rows, time.time() - t_pack,
+                              lineage)
+
+    def _guard(fn):
+        def run():
+            try:
+                fn()
+            except BaseException as e:  # surfaced after join
+                errors.append(e)
+        return run
+
+    threads = [InheritableThread(_guard(fn), daemon=True)
+               for fn, segs in ((_write_docmap, doc_segs),
+                                (_write_postings, post_segs))
+               if segs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
 
 
 def build_index(spark: SparkSession, df: DataFrame, index_dir: str, *,
@@ -591,15 +659,6 @@ def _build_index_locked(spark: SparkSession, df: DataFrame, index_dir: str,
                         max_segments: Optional[int],
                         with_positions: bool = False) -> BuildResult:
     t0 = time.time()
-    timing = os.environ.get("PSL_BUILD_TIMING")
-    t_last = [time.time()]
-
-    def _mark(phase: str) -> None:
-        if timing:
-            now = time.time()
-            print(f"[build] {phase}: {now - t_last[0]:.2f}s", flush=True)
-            t_last[0] = now
-
     cat = IndexCatalog(index_dir)
 
     # ---- stage 0: extract + docIDs + tokenize + invert → staged runs -------
@@ -660,57 +719,25 @@ def _build_index_locked(spark: SparkSession, df: DataFrame, index_dir: str,
                 for table in ("docmap", "postings"):
                     for s in cat.staged_segments(table):
                         cat.drop_segment(table, s)
-    seg_totals: dict = {}
-    if not os.path.exists(stage_marker):
+    if os.path.exists(stage_marker):
+        seg_totals = _staged_seg_totals(spark, stage_dir)  # resume
+    else:
         if os.path.isdir(stage_dir):
             import shutil
             shutil.rmtree(stage_dir)  # partial stage from a killed run
-        # local paths → worker-direct parquet sink (atomic per-task rename);
-        # scheme'd paths (hdfs://, s3://) → JVM writer via the output
-        # committer (rename semantics differ on object stores)
-        direct = "://" not in stage_dir
-        if direct:
-            os.makedirs(stage_dir, exist_ok=True)
-            # the sink's result rows ARE the per-(task, seg) stats — fold
-            # them here so no follow-up stats job is needed
-            for r in (_stage0_df(spark, df, text_col=text_col,
-                                 id_col=id_col, url_col=url_col,
-                                 html_col=html_col, lang_filter=lang_filter,
-                                 segment_docs=segment_docs,
-                                 n_buckets=n_buckets, out_dir=stage_dir,
-                                 with_positions=with_positions).collect()):
-                cur = seg_totals.get(int(r["seg"]), (0, 0))
-                seg_totals[int(r["seg"])] = (cur[0] + int(r["n"]),
-                                             cur[1] + int(r["sdl"]))
-        else:
-            (_stage0_df(spark, df, text_col=text_col, id_col=id_col,
-                        url_col=url_col, html_col=html_col,
-                        lang_filter=lang_filter, segment_docs=segment_docs,
-                        n_buckets=n_buckets,
-                        with_positions=with_positions)
-             .write.mode("overwrite").parquet(stage_dir))
+        seg_totals = _stage_runs(
+            spark, df, stage_dir, text_col=text_col, id_col=id_col,
+            url_col=url_col, html_col=html_col, lang_filter=lang_filter,
+            segment_docs=segment_docs, n_buckets=n_buckets,
+            with_positions=with_positions)
         with open(stage_marker, "w") as fh:
             json.dump({"ts": time.time(), "params": build_params}, fh)
-    runs = spark.read.schema(RUNS_SCHEMA).parquet(stage_dir)
-    _mark("stage0(extract+doc_ids+tf+invert->runs)")
 
     # ---- segments + global stats --------------------------------------
-    # fresh direct-sink run: already folded from the stage-0 job's own
-    # result rows; resume or JVM-writer path: ONE tiny scan job over the
-    # staged tb == -2 stats rows
-    if not seg_totals:
-        srows = (runs.filter(F.col("tb") == -2)
-                 .groupBy("seg")
-                 .agg(F.sum(F.element_at("doc_ids", 1)).alias("n"),
-                      F.sum(F.element_at("dls", 1)).alias("sdl"))
-                 .collect())
-        seg_totals = {int(r["seg"]): (int(r["n"]), int(r["sdl"]))
-                      for r in srows}
     all_segs = sorted(seg_totals)
     n_docs = int(sum(v[0] for v in seg_totals.values()))
     sum_dl = int(sum(v[1] for v in seg_totals.values()))
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
-    _mark("segs+stats_scan")
     for table in ("docmap", "postings"):
         staged = set(cat.staged_segments(table))
         d = os.path.join(index_dir, table)
@@ -726,104 +753,11 @@ def _build_index_locked(spark: SparkSession, df: DataFrame, index_dir: str,
     todo = [s for s in all_segs if s not in done_doc or s not in done_post]
     if max_segments is not None:
         todo = todo[:max_segments]
-
-    # ---- docmap + postings, written CONCURRENTLY ---------------------------
-    # Independent outputs from the same staged runs; two driver threads let
-    # the Spark scheduler overlap the small docmap write with the pack
-    # exchange instead of paying two sequential job latencies.
-    doc_todo = [s for s in todo if s not in done_doc]
-    post_todo = [s for s in todo if s not in done_post]
-    errors: List[BaseException] = []
-
-    def _write_docmap() -> None:
-        t_dm = time.time()
-        # repartition to align tasks with output partitions: one writer task
-        # per segment → one file per dir instead of tasks×segments files
-        (runs.filter((F.col("tb") == -1) & F.col("seg").isin(doc_todo))
-         .select(F.element_at("doc_ids", 1).alias("doc_id"), "url",
-                 F.element_at("dls", 1).alias("doc_len"), "seg")
-         .repartition(max(len(doc_todo), 1), F.col("seg"))
-         .write.partitionBy("seg").mode("append").parquet(cat.docmap_dir()))
-        for s in doc_todo:
-            cat.mark_staged("docmap", s)
-        if timing:
-            print(f"[build]   docmap_thread: {time.time() - t_dm:.2f}s",
-                  flush=True)
-
-    def _write_postings() -> None:
-        t_pack = time.time()
-        # reducer count: ~4 waves per core for balance, growing with data
-        # volume (≈50M posting entries per task bounds retry granularity;
-        # the pack UDF itself streams batch-at-a-time so task memory does
-        # not grow with partition size), capped at the number of distinct
-        # (seg, tb) exchange keys — more reducers than keys is pure task
-        # overhead. The former sum_dl//300k sizing launched 240 reducers for
-        # an 8-core run (task-wave overhead, 240 tiny parquet files).
-        par = spark.sparkContext.defaultParallelism
-        # ~4 waves/core for big inputs, but never more reducers than the
-        # data supports or distinct (seg, tb) keys; ≥50M entries per task
-        # bounds retry granularity at huge scale. The small-input floor
-        # relaxes to ~50k entries/task up to ONE full wave of cores (a
-        # 2.7M-entry corpus previously packed on 14 of 32 cores purely
-        # because of the 200k floor).
-        target = max(min(4 * par, sum_dl // 200_000 + 1),
-                     min(par, sum_dl // 50_000 + 1))
-        n_out_parts = max(1, min(len(post_todo) * n_buckets,
-                                 max(target, sum_dl // 50_000_000 + 1)))
-        src = (runs.filter((F.col("tb") >= 0)
-                           & F.col("seg").isin(post_todo)).drop("url"))
-        if "://" not in cat.postings_dir():
-            # worker-direct parquet sink; per-(seg, tb) metrics come back as
-            # the job's rows — no post-hoc build_log scan job
-            metric_rows = _pack_runs(
-                src, avgdl=avgdl, n_out_parts=n_out_parts,
-                sink_dir=cat.postings_dir()).collect()
-            if timing:
-                print(f"[build]   pack_job({n_out_parts} parts): "
-                      f"{time.time() - t_pack:.2f}s", flush=True)
-            t_ms = time.time()
-            for s in post_todo:
-                cat.mark_staged("postings", s)
-            t_bl = time.time()
-            if timing:
-                print(f"[build]   mark_staged: {t_bl - t_ms:.2f}s",
-                      flush=True)
-            _write_build_log_rows(spark, cat, metric_rows,
-                                  time.time() - t_pack, lineage or {})
-            if timing:
-                print(f"[build]   build_log: {time.time() - t_bl:.2f}s "
-                      f"| postings_thread: {time.time() - t_pack:.2f}s",
-                      flush=True)
-        else:
-            packed = _pack_runs(src, avgdl=avgdl, n_out_parts=n_out_parts)
-            (packed.write.partitionBy("seg", "tb").mode("append")
-             .parquet(cat.postings_dir()))
-            for s in post_todo:
-                cat.mark_staged("postings", s)
-            _write_build_log(spark, cat, post_todo, time.time() - t_pack,
-                             lineage or {})
-
-    import threading
-
-    def _guard(fn):
-        def run():
-            try:
-                fn()
-            except BaseException as e:  # surfaced after join
-                errors.append(e)
-        return run
-
-    threads = [threading.Thread(target=_guard(fn), daemon=True)
-               for fn, todo_list in ((_write_docmap, doc_todo),
-                                     (_write_postings, post_todo))
-               if todo_list]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise errors[0]
-    _mark("docmap+postings_write")
+    _write_segments(spark, cat, stage_dir,
+                    doc_segs=[s for s in todo if s not in done_doc],
+                    post_segs=[s for s in todo if s not in done_post],
+                    avgdl=avgdl, sum_dl=sum_dl, n_buckets=n_buckets,
+                    lineage=lineage or {})
 
     # ---- commit (only when every segment is staged) -------------------------
     staged_all = (set(cat.staged_segments("postings"))
@@ -888,48 +822,6 @@ def _build_index_locked(spark: SparkSession, df: DataFrame, index_dir: str,
         shutil.rmtree(os.path.join(index_dir, "_stage"), ignore_errors=True)
     return BuildResult(snapshot_id, n_docs, avgdl, sorted(staged_all),
                        time.time() - t0)
-
-
-def _build_postings(toks: DataFrame, *, avgdl: float, n_buckets: int,
-                    n_out_parts: int = 64,
-                    with_positions: bool = False) -> DataFrame:
-    """tokens → packed posting rows.
-
-    Plan: map-side SPIMI combine (per-Arrow-batch mini posting lists; one
-    exchanged row per (task-batch, seg, term) carrying doc/tf/dl ARRAYS) →
-    ONE exchange hash-partitioned by (seg, tb) → sortWithinPartitions(seg,
-    tb, term) → streaming merge-pack UDF that concatenates each term's runs
-    with term-boundary carry across batches (memory bound = one term's
-    postings ≤ segment_docs — the SPIMI-merge shape, reference
-    inverted_index_skip_list.py:73-109 distributed) → write, one file per
-    (seg, tb) dir.
-
-    This shape replaced (1) a groupBy(collect_list(struct)) plan whose JVM
-    object churn profiled as the most expensive stage of the build, then
-    (2) an occurrence-level exchange (one row per posting) whose 160M-row
-    shuffle + Arrow transfer dominated and spilled; array rows cut exchanged
-    rows ~50x and pay term strings once per task-batch instead of once per
-    few cores. tb is computed in Python zlib.crc32 over the per-task term
-    dictionary (identical to java.util.zip.CRC32, verified by test)."""
-    # --- map-side SPIMI combine: per-task mini posting lists ---------------
-    # Each map task inverts its slice into (seg, term) -> arrays of
-    # (doc_id, tf, dl). The exchange then carries ONE row per (task, seg,
-    # term) with array payloads instead of one row per POSTING — term
-    # strings and row overhead are paid once per task instead of once per
-    # occurrence (the distributed form of the reference's in-memory dict,
-    # inverted_index_skip_list.py:48-57). For Zipf-hot terms this shrinks
-    # the shuffle by orders of magnitude.
-    combine_schema = ("seg long, tb int, term string, doc_ids array<long>, "
-                      "tfs array<long>, dls array<long>, poss array<long>")
-
-    def map_combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = _mini_invert(b, n_buckets, with_positions=with_positions)
-            if out is not None:
-                yield out
-
-    mini = toks.mapInPandas(map_combine, combine_schema)
-    return _pack_runs(mini, avgdl=avgdl, n_out_parts=n_out_parts)
 
 
 POSTINGS_PA_SCHEMA = None
@@ -1041,9 +933,17 @@ PACK_METRICS_SCHEMA = ("seg long, tb int, n_terms long, n_postings long, "
 def _pack_runs(mini: DataFrame, *, avgdl: float, n_out_parts: int = 64,
                sink_dir: Optional[str] = None) -> DataFrame:
     """SPIMI run rows (seg, tb, term, doc/tf/dl arrays) → packed postings:
-    ONE exchange hash-partitioned by (seg, tb) → sortWithinPartitions →
-    streaming merge-pack with term-boundary carry (see _build_postings
-    docstring for the plan rationale).
+    ONE exchange hash-partitioned by (seg, tb) → sortWithinPartitions(seg,
+    tb, term) → streaming merge-pack that concatenates each term's runs
+    with term-boundary carry across batches (memory bound = one term's
+    postings ≤ segment_docs — the SPIMI-merge shape, reference
+    inverted_index_skip_list.py:73-109 distributed).
+
+    This shape replaced (1) a groupBy(collect_list(struct)) plan whose JVM
+    object churn profiled as the most expensive stage of the build, then
+    (2) an occurrence-level exchange (one row per posting) whose shuffle +
+    Arrow transfer dominated and spilled; run rows with array payloads cut
+    exchanged rows ~50x and pay term strings once per run.
 
     sink_dir=None → returns the POSTINGS_SCHEMA DataFrame (JVM writer path).
     With sink_dir set, pack tasks write hive-partitioned parquet
@@ -1135,8 +1035,13 @@ def _pack_runs(mini: DataFrame, *, avgdl: float, n_out_parts: int = 64,
                             d, f"part-{pid:05d}.parquet")
                         state["tmp"] = os.path.join(
                             d, f"_tmp-part-{pid:05d}-{attempt}.inprogress")
+                        # min/max statistics only for `term` (the one
+                        # column a query prunes row groups on): those of the
+                        # binary/list payload columns are never read and
+                        # cost ~9% of the file
                         state["writer"] = pq.ParquetWriter(
-                            state["tmp"], file_schema, compression="snappy")
+                            state["tmp"], file_schema, compression="snappy",
+                            write_statistics=["term"])
                         state["key"] = key
                     sl = body.slice(s, e - s)
                     state["writer"].write_table(sl)
@@ -1171,74 +1076,14 @@ def _pack_runs(mini: DataFrame, *, avgdl: float, n_out_parts: int = 64,
     return runs.mapInArrow(pack_sink, PACK_METRICS_SCHEMA)
 
 
-def _mini_invert(b: pd.DataFrame, n_buckets: int,
-                 with_positions: bool = False) -> Optional[pd.DataFrame]:
-    """Vectorized per-batch inversion: staged rows (doc_id, doc_len, seg,
-    terms, tfs[, poss]) -> one row per (seg, term) with doc/tf/dl arrays
-    (plus per-entry in-doc position runs when with_positions)."""
-    lens = b["terms"].map(len).to_numpy(dtype=np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return None
-    flat_terms = np.concatenate(
-        [np.asarray(t, dtype=object) for t in b["terms"] if len(t)])
-    flat_tfs = np.concatenate(
-        [np.asarray(t, dtype=np.int64) for t in b["tfs"] if len(t)])
-    docs_rep = np.repeat(b["doc_id"].to_numpy(np.int64), lens)
-    dls_rep = np.repeat(b["doc_len"].to_numpy(np.int64), lens)
-    segs_rep = np.repeat(b["seg"].to_numpy(np.int64), lens)
-    codes, uniq = pd.factorize(flat_terms)
-    # group by (seg, code); stable sort keeps doc order within groups
-    key = segs_rep * np.int64(len(uniq)) + codes
-    order = np.argsort(key, kind="stable")
-    key_s = key[order]
-    change = np.empty(total, dtype=bool)
-    change[0] = True
-    change[1:] = key_s[1:] != key_s[:-1]
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], total)
-    g_seg = segs_rep[order][starts]
-    g_code = codes[order][starts]
-    uniq = np.asarray(uniq, dtype=object)
-    g_term = uniq[g_code]
-    docs_s, tfs_s, dls_s = docs_rep[order], flat_tfs[order], dls_rep[order]
-    if with_positions:
-        # per-entry position runs follow their entry through the sort
-        # (ragged gather, same construction as codec.pack_flat's)
-        flat_pos = (np.concatenate(
-            [np.asarray(t, dtype=np.int64) for t in b["poss"] if len(t)])
-            if int(flat_tfs.sum()) else np.empty(0, dtype=np.int64))
-        src_occ = np.zeros(total + 1, dtype=np.int64)
-        np.cumsum(flat_tfs, out=src_occ[1:])
-        new_occ = np.zeros(total + 1, dtype=np.int64)
-        np.cumsum(tfs_s, out=new_occ[1:])
-        T = int(new_occ[-1])
-        take = (np.repeat(src_occ[:-1][order], tfs_s)
-                + np.arange(T, dtype=np.int64)
-                - np.repeat(new_occ[:-1], tfs_s))
-        pos_g = flat_pos[take]
-        poss_col = [pos_g[new_occ[s]:new_occ[e]]
-                    for s, e in zip(starts, ends)]
-    else:
-        poss_col = [None] * starts.size
-    tb_of = {t: term_bucket(t, n_buckets) for t in uniq}
-    return pd.DataFrame({
-        "seg": g_seg,
-        "tb": np.fromiter((tb_of[t] for t in g_term), dtype=np.int32,
-                          count=g_term.size),
-        "term": g_term,
-        "doc_ids": [docs_s[s:e] for s, e in zip(starts, ends)],
-        "tfs": [tfs_s[s:e] for s, e in zip(starts, ends)],
-        "dls": [dls_s[s:e] for s, e in zip(starts, ends)],
-        "poss": poss_col,
-    })
-
-
 def _write_build_log_rows(spark: SparkSession, cat: IndexCatalog,
                           metric_rows, phase_elapsed_sec: float,
                           lineage: dict) -> None:
-    """build_log from the pack job's own metric rows (sink path) — metrics
-    AS DATA with zero extra jobs over the postings table."""
+    """The one build_log writer: per-(seg, tb) pack metrics (seg, tb,
+    n_terms, n_postings, bytes_packed rows — the sink pack job's own
+    result, or an aggregate of the written postings) + lineage source.
+    terms/sec and postings/sec attribute the pack phase's wall-clock
+    across partitions proportionally."""
     from pysearchlite_spark.sources.catalog import BUILD_LOG_SCHEMA
     el = max(phase_elapsed_sec, 1e-9)
     now = time.time()
@@ -1282,30 +1127,3 @@ def _write_build_log_rows(spark: SparkSession, cat: IndexCatalog,
         return
     (spark.createDataFrame(rows, BUILD_LOG_SCHEMA)
      .coalesce(1).write.mode("append").parquet(log_dir))
-
-
-def _write_build_log(spark: SparkSession, cat: IndexCatalog,
-                     segs: List[int], phase_elapsed_sec: float,
-                     lineage: dict) -> None:
-    """Per-(seg, tb)-partition build metrics + lineage, computed by
-    aggregating the just-written postings table (metrics AS DATA — a Python
-    accumulator here serializes task updates through the driver's
-    single-threaded accumulator channel and measurably stalls the build at
-    high parallelism; an aggregate scan of the small packed table does not).
-    terms/sec and postings/sec attribute the phase wall-clock across
-    partitions proportionally."""
-    from pysearchlite_spark.sources.catalog import POSTINGS_SCHEMA as PS
-    el = max(phase_elapsed_sec, 1e-9)
-    agg = (spark.read.schema(PS).parquet(cat.postings_dir())
-           .filter(F.col("seg").isin(segs))
-           .groupBy("seg", "tb")
-           .agg(F.count("*").alias("n_terms"),
-                F.sum("df").alias("n_postings"),
-                F.sum(F.length("docs") + F.length("tfs")
-                      + F.length("dls")).alias("bytes_packed")))
-    (agg.withColumn("elapsed_sec", F.lit(float(el)))
-        .withColumn("terms_per_sec", F.col("n_terms") / F.lit(el))
-        .withColumn("postings_per_sec", F.col("n_postings") / F.lit(el))
-        .withColumn("source", F.lit(str(lineage.get("source", ""))))
-        .withColumn("built_at", F.lit(time.time()))
-        .coalesce(1).write.mode("append").parquet(cat.build_log_dir()))

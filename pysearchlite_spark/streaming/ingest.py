@@ -11,7 +11,10 @@ Streaming's foreachBatch sink.
 Two entrypoints:
   * append_batch(...)   — the core primitive: index a DataFrame of new pages
     as fresh segments on top of an existing index (new docIDs continue after
-    the current max).
+    the current max). Segments are written by build_index's own writer
+    (plans.builder._stage_runs + _write_segments: one fused stage-0 Python
+    hop, then the docmap write and the sink pack), so an appended segment
+    has the layout a build produces.
   * stream_ingest(...)  — wires append_batch into a readStream via
     foreachBatch; checkpointing is Spark's (exactly-once per micro-batch)
     plus the catalog's atomic snapshot commit (idempotent re-append guarded
@@ -30,6 +33,8 @@ the baked partials).
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from typing import Optional
 
@@ -37,10 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pysearchlite_spark.plans.builder import (DEFAULT_TERM_BUCKETS,
-                                              _build_postings, _tf_stage,
-                                              _tf_pos_stage)
-from pysearchlite_spark.extract import make_extract_udf
-from pysearchlite_spark.sources.catalog import (DOCMAP_SCHEMA, IndexCatalog)
+                                              _stage_runs, _write_segments)
+from pysearchlite_spark.sources.catalog import IndexCatalog
 
 
 def _refuse_if_suspended_build(index_dir: str) -> None:
@@ -49,7 +52,6 @@ def _refuse_if_suspended_build(index_dir: str) -> None:
     from max_seg_id, so an append's freshly allocated id WOULD collide
     with a not-yet-built segment and the resumed build would silently
     adopt the append's rows as its own. Refuse loudly instead."""
-    import os
     if os.path.exists(os.path.join(index_dir, "_stage", "runs", "_STAGED")):
         raise RuntimeError(
             f"index {index_dir} has a live batch-build stage checkpoint "
@@ -142,54 +144,32 @@ def _append_batch_locked(spark: SparkSession, batch: DataFrame,
     next_seg = cat.max_seg_id() + 1
     next_doc = next_seg * segment_docs
 
-    if lang_filter and "lang" in batch.columns:
-        batch = batch.filter(F.col("lang") == lang_filter)
-    if html_col is not None:
-        batch = batch.withColumn(text_col,
-                                 make_extract_udf()(F.col(html_col)))
-
-    # new docIDs continue after the last allocated segment boundary —
-    # deterministic within the batch (order by url)
-    from pysearchlite_spark.plans.builder import assign_doc_ids
-    base = batch.select(F.col(url_col).alias("url"),
-                        F.col(text_col).alias("text"))
-    docs = assign_doc_ids(base, "url").select(
-        (F.col("doc_id") + F.lit(next_doc)).alias("doc_id"), "url", "text")
-
-    stage = _tf_pos_stage if with_positions else _tf_stage
-    stage_schema = ("doc_id long, url string, doc_len long, "
-                    "terms array<string>, tfs array<int>")
-    if with_positions:
-        stage_schema += ", poss array<long>"
-    toks = (docs.mapInPandas(stage, stage_schema)
-            .withColumn("seg", (F.col("doc_id") / F.lit(segment_docs))
-                        .cast("long")))
-    toks = toks.persist()  # micro-batches are small; cache build is cheap
-    new_segs = sorted(r["seg"] for r in
-                      toks.select("seg").distinct().collect())
-
-    (toks.select("doc_id", "url", "doc_len", "seg")
-     .repartition(max(len(new_segs), 1), F.col("seg"))
-     .write.partitionBy("seg").mode("append").parquet(cat.docmap_dir()))
-    for s in new_segs:
-        cat.mark_staged("docmap", s)
-
-    add = toks.agg(F.count("*").alias("n"),
-                   F.sum("doc_len").alias("sdl")).collect()[0]
-    n_docs = int(old_stats["n_docs"]) + int(add["n"])
-    sum_dl = int(old_stats.get("sum_dl", 0)) + int(add["sdl"] or 0)
-    avgdl = sum_dl / n_docs if n_docs else 0.0
-
     n_buckets = int(old_stats.get("n_buckets", DEFAULT_TERM_BUCKETS))
-    packed = _build_postings(toks, avgdl=avgdl, n_buckets=n_buckets,
-                             n_out_parts=max(len(new_segs), 1) * n_buckets,
-                             with_positions=with_positions)
-    (packed.write.partitionBy("seg", "tb").mode("append")
-     .parquet(cat.postings_dir()))
-    for s in new_segs:
-        cat.mark_staged("postings", s)
 
-    toks.unpersist()
+    # the SAME segment writer as build_index: fused stage 0 (html extract +
+    # docIDs + tokenize + invert) into a scratch stage dir of the append's
+    # own (_stage/runs is the suspended-build guard's), then docmap + pack.
+    # New docIDs continue after the last allocated segment boundary —
+    # deterministic within the batch (crc32 bucket, then url)
+    stage_dir = os.path.join(index_dir, "_stage", "append")
+    shutil.rmtree(stage_dir, ignore_errors=True)  # crashed append's leftover
+    seg_totals = _stage_runs(
+        spark, batch, stage_dir, text_col=text_col, id_col=None,
+        url_col=url_col, html_col=html_col, lang_filter=lang_filter,
+        segment_docs=segment_docs, n_buckets=n_buckets,
+        with_positions=with_positions, first_id=next_doc)
+    new_segs = sorted(seg_totals)
+    add_n = sum(v[0] for v in seg_totals.values())
+    add_sdl = sum(v[1] for v in seg_totals.values())
+    n_docs = int(old_stats["n_docs"]) + add_n
+    sum_dl = int(old_stats.get("sum_dl", 0)) + add_sdl
+    avgdl = sum_dl / n_docs if n_docs else 0.0
+    # postings pack at the post-append global avgdl; reducers are sized
+    # from the batch's own volume
+    _write_segments(spark, cat, stage_dir, doc_segs=new_segs,
+                    post_segs=new_segs, avgdl=avgdl, sum_dl=add_sdl,
+                    n_buckets=n_buckets,
+                    lineage={"source": "streaming.append_batch"})
 
     pack_avgdl = dict(old_stats.get("pack_avgdl") or {})
     pack_avgdl.update({str(s): avgdl for s in new_segs})
@@ -242,12 +222,14 @@ def _append_batch_locked(spark: SparkSession, batch: DataFrame,
             applied = list(cur.get("applied_delete_files") or [])
         else:
             delete_files, applied = [], []
-        return cat._commit_snapshot_locked(
+        snapshot_id = cat._commit_snapshot_locked(
             sorted(old_doc_segs + new_segs), stats, lineage,
             posting_segments=sorted(old_post_segs + new_segs),
             doc_segments=sorted(old_doc_segs + new_segs),
             delete_files=delete_files,
             applied_delete_files=applied)
+    shutil.rmtree(stage_dir, ignore_errors=True)
+    return snapshot_id
 
 
 def upsert_batch(spark: SparkSession, batch: DataFrame, index_dir: str, *,
@@ -341,8 +323,6 @@ def _neardup_filter(spark: SparkSession, batch_df: DataFrame, nd_dir: str,
     the add mutates the index the lazy plan reads — and unpersists every
     intermediate the dedup passes cached (via their _registry hooks), so
     a long-lived stream leaks nothing between micro-batches."""
-    import os
-
     from pysearchlite_spark.operators.dedup import minhash_lsh_pairs
     from pysearchlite_spark.operators.neardup import NearDupIndex
 

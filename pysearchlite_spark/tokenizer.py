@@ -54,38 +54,26 @@ def tokens_series(texts: pd.Series) -> pd.Series:
 
 
 
-def _split_rows(out_rows, out_codes, counts, uniques, n: int):
-    """Slice _tf_flat's flat per-(row, term) entries into per-row lists
-    (out_rows is non-decreasing, see _tf_flat). Shared by tf_series and
-    tf_pos_series so the boundary logic cannot diverge."""
-    row_bounds = np.searchsorted(out_rows, np.arange(n + 1))
-    per_row_terms = uniques[out_codes]
-    terms_out = [per_row_terms[s:e] for s, e in
-                 zip(row_bounds[:-1], row_bounds[1:])]
-    tfs_out = [counts[s:e] for s, e in zip(row_bounds[:-1], row_bounds[1:])]
-    return terms_out, tfs_out, row_bounds
-
-
 def tf_series(texts: pd.Series):
     """Vectorized per-doc term frequencies.
 
     Returns (terms, tfs, doc_lens): for each input row, the DISTINCT tokens,
-    their counts, and the total token count. One pandas groupby over the
-    flattened (row, token) pairs — C-speed, no per-row Python loops. Feeding
-    (term, tf) pairs into the posting build removes an entire 1-row-per-
-    OCCURRENCE shuffle from the plan (the tf aggregation happens here,
-    before any exchange)."""
+    their counts, and the total token count. One factorize over the
+    flattened (row, token) pairs — C-speed, no per-row Python loops."""
     flat, lens = flat_tokens(texts)
     n = len(texts)
     if n == 0 or flat.size == 0:
         empty_s = pd.Series([[] for _ in range(n)], index=texts.index)
         empty_i = pd.Series([[] for _ in range(n)], index=texts.index)
         return empty_s, empty_i, pd.Series(lens, index=texts.index)
-    out_rows, out_codes, counts, uniques, _k = _tf_flat(flat, lens, n)
-    terms_out, tfs_out, _bounds = _split_rows(out_rows, out_codes, counts,
-                                              uniques, n)
-    return (pd.Series(terms_out, index=texts.index),
-            pd.Series(tfs_out, index=texts.index),
+    out_rows, out_codes, counts, uniques = _tf_flat(flat, lens, n)
+    # out_rows is non-decreasing (see _tf_flat): slice per row
+    bounds = np.searchsorted(out_rows, np.arange(n + 1))
+    per_row_terms = uniques[out_codes]
+    return (pd.Series([per_row_terms[s:e] for s, e in
+                       zip(bounds[:-1], bounds[1:])], index=texts.index),
+            pd.Series([counts[s:e] for s, e in zip(bounds[:-1], bounds[1:])],
+                      index=texts.index),
             pd.Series(lens, index=texts.index))
 
 
@@ -140,61 +128,7 @@ def _tf_flat(flat: np.ndarray, lens: np.ndarray, n: int):
     counts = np.bincount(kcodes)
     out_rows = uniq_keys // len(uniques)
     out_codes = uniq_keys % len(uniques)
-    return (out_rows, out_codes, counts,
-            np.asarray(uniques, dtype=object), kcodes)
-
-
-def tf_pos_series(texts: pd.Series):
-    """tf_series plus in-doc positions: returns (terms, tfs, poss, lens)
-    where poss[i] is doc i's positions FLATTENED in the same entry order
-    as terms[i]/tfs[i] (each distinct term's occurrence positions
-    consecutive and ascending — tfs[i] delimits the runs). Feeds the
-    positional posting build; one extra stable argsort over the
-    occurrence array is the only cost beyond tf_series."""
-    flat, lens = flat_tokens(texts)
-    n = len(texts)
-    if n == 0 or flat.size == 0:
-        empty = pd.Series([[] for _ in range(n)], index=texts.index)
-        empty2 = pd.Series([[] for _ in range(n)], index=texts.index)
-        empty3 = pd.Series([[] for _ in range(n)], index=texts.index)
-        return empty, empty2, empty3, pd.Series(lens, index=texts.index)
-    out_rows, out_codes, counts, uniques, kcodes = _tf_flat(flat, lens, n)
-    total = flat.size
-    pos_occ = (np.arange(total, dtype=np.int64)
-               - np.repeat(np.concatenate(
-                   ([0], np.cumsum(lens)[:-1])).astype(np.int64), lens))
-    # group occurrence positions by entry: kcodes values are entry ids in
-    # first-occurrence (row-major) order, so the stable argsort yields
-    # positions grouped per (row, term) entry, ascending within each
-    order = np.argsort(kcodes, kind="stable")
-    pos_grouped = pos_occ[order]
-    E = counts.size
-    entry_offs = np.zeros(E + 1, dtype=np.int64)
-    np.cumsum(counts, out=entry_offs[1:])
-    terms_out, tfs_out, row_bounds = _split_rows(out_rows, out_codes,
-                                                 counts, uniques, n)
-    poss_out = [pos_grouped[entry_offs[s]:entry_offs[e]] for s, e in
-                zip(row_bounds[:-1], row_bounds[1:])]
-    return (pd.Series(terms_out, index=texts.index),
-            pd.Series(tfs_out, index=texts.index),
-            pd.Series(poss_out, index=texts.index),
-            pd.Series(lens, index=texts.index))
-
-
-def tf_pairs(texts: pd.Series):
-    """Vectorized distinct (row, term) pairs for a batch of texts.
-
-    Returns (out_rows, out_codes, counts, uniques, lens) — the flat form of
-    tf_series, for callers (the index build) that immediately re-flatten:
-    skips building per-row object arrays AND the re-factorize a separate
-    inversion pass would pay."""
-    flat, lens = flat_tokens(texts)
-    n = len(texts)
-    if n == 0 or flat.size == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z, np.empty(0, dtype=object), lens
-    out_rows, out_codes, counts, uniques, _k = _tf_flat(flat, lens, n)
-    return out_rows, out_codes, counts, uniques, lens
+    return out_rows, out_codes, counts, np.asarray(uniques, dtype=object)
 
 
 def query_terms(query: str, dedup: bool = True) -> List[str]:

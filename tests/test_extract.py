@@ -3,10 +3,8 @@ extract_text(page_html(text)) == text (FIXTURES.md §1)."""
 
 import hashlib
 
-import pandas as pd
-
 from pysearchlite_spark.datagen import page_html, page_text
-from pysearchlite_spark.extract import extract_series, extract_text
+from pysearchlite_spark.extract import extract_text
 
 
 def test_basic_extraction():
@@ -46,9 +44,3 @@ def test_datagen_invariant_byte_identical():
         assert got == text, f"row {i}"
         assert hashlib.sha256(got.encode()).digest() == \
             hashlib.sha256(text.encode()).digest()
-
-
-def test_series_matches_scalar():
-    htmls = [page_html(page_text(1, i), i) for i in range(50)]
-    ser = pd.Series(htmls)
-    assert extract_series(ser).tolist() == [extract_text(h) for h in htmls]

@@ -10,13 +10,11 @@ import random
 import re
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pysearchlite_spark import codec
 from pysearchlite_spark.engine import SearchIndex
 from pysearchlite_spark.plans.builder import build_index
-from pysearchlite_spark.tokenizer import tf_pos_series
 
 
 def _toks(text):
@@ -32,43 +30,6 @@ def _brute_phrase(corpus, phrase):
         if any(toks[i:i + L] == pt for i in range(len(toks) - L + 1)):
             out.append(name)
     return out
-
-
-# ---------------------------------------------------------- tokenizer ----
-
-def test_tf_pos_series_layout():
-    s = pd.Series(["the dog the dog cat", "", "a b a"])
-    terms, tfs, poss, lens = tf_pos_series(s)
-    assert lens.tolist() == [5, 0, 3]
-    # row 0: entries in first-occurrence order (the, dog, cat)
-    assert list(terms[0]) == ["the", "dog", "cat"]
-    assert list(tfs[0]) == [2, 2, 1]
-    # positions flattened in entry order, ascending within each entry
-    assert list(poss[0]) == [0, 2, 1, 3, 4]
-    assert list(terms[1]) == [] and list(poss[1]) == []
-    assert list(terms[2]) == ["a", "b"]
-    assert list(poss[2]) == [0, 2, 1]
-
-
-def test_tf_pos_series_matches_tf_series():
-    from pysearchlite_spark.tokenizer import tf_series
-    rng = random.Random(3)
-    texts = pd.Series([" ".join(rng.choices("a b c dd e".split(),
-                                            k=rng.randint(0, 30)))
-                       for _ in range(50)])
-    t1, f1, lens1 = tf_series(texts)
-    t2, f2, poss, lens2 = tf_pos_series(texts)
-    assert lens1.tolist() == lens2.tolist()
-    for i in range(len(texts)):
-        assert list(t1[i]) == list(t2[i])
-        assert list(f1[i]) == list(f2[i])
-        # each entry's positions really hold that term, in order
-        toks = _toks(texts[i])
-        offs = np.concatenate(([0], np.cumsum(list(f2[i]))))
-        for j, term in enumerate(t2[i]):
-            run = list(poss[i][offs[j]:offs[j + 1]])
-            assert run == sorted(run)
-            assert all(toks[p] == term for p in run)
 
 
 # --------------------------------------------------------------- codec ----
